@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line. The line is (a) printed to stdout and flushed the
@@ -9,57 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitioning is a per-deployment knob, not a constant: at
-    // sf<=0.1 one partition per core is right, but a 600M-row shuffle in
-    // 32 partitions is ~19M rows each — past executor memory, so the
-    // sort spills and the plan goes superlinear (measured at sf100:
-    // q18 93.8 s at 32 partitions). Real cluster jobs size this so each
-    // shuffle partition lands ~100-200MB; SPARK_GRAFT_SHUFFLE_PARTITIONS
-    // exposes the same knob to the scale rungs. AQE coalesces small
-    // partitions back down, so oversizing is cheap.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // Input-split sizing, same reasoning: the scale rungs ship some
-    // tables as ONE parquet file (the nanos events table), so the
-    // default 128MB split gives a 1.2GB file only ~10 scan tasks on a
-    // 32-core box. Smaller splits restore scan parallelism; on a real
-    // cluster the input is many files and the default is fine.
-    val maxPartitionBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-    // AQE coalescing mode: parallelismFirst=true (Spark's default) keeps
-    // post-shuffle partition count at defaultParallelism even when the
-    // data is tiny; false makes AQE size partitions to
-    // advisoryPartitionSizeInBytes — the setting Spark's own docs
-    // recommend for production, and the scale-adaptive choice (partition
-    // count derives from DATA SIZE at any scale factor, not from the
-    // local core count). Both knobs are env-overridable for the scale
-    // rungs; defaults chosen by the r16 A/B sweep (see
-    // OPTIMIZATION_r16.md).
-    val parallelismFirst =
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
-    val advisoryBytes =
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "67108864")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        parallelismFirst)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        advisoryBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table queries write real table data: pin the warehouse
-      // to a controlled location instead of ./spark-warehouse under
-      // whatever cwd spark-submit ran from (multi-GB at sf100)
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          "/root/repo/target/scale/warehouse"))
-      .getOrCreate()
-    // ERROR, not WARN: every saved log line is budget for the JSON tail
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     // warm-up: JVM/codegen/parquet-reader paths, so the first timed query
     // isn't charged session startup cost
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -112,11 +61,11 @@ object Bench {
         // the gate so its fits start on a clean heap; the matching
         // collect AFTER runs below, also outside every timer.
         if (gateOnce(name)) System.gc()
-        val dt = (1 to reps).map { _ =>
+        // One rep: its wall time, or None if the query threw. A failure
+        // ends the query's reps and lists it under "failed" instead of
+        // in `queries` and `total`, so it never reads as a fast query.
+        def rep(): Option[Double] = {
           val t0 = System.nanoTime()
-          // SPARK_GRAFT_RETHROW=1 surfaces per-query failures (dev
-          // attribution aid — a swallowed exception reads as an
-          // impossibly fast timing in the sweep otherwise).
           // SPARK_GRAFT_FORCE_FULL=1 executes the FULL physical plan
           // (toRdd) instead of count(): for pure-projection queries
           // Catalyst collapses count() to a parquet metadata count and
@@ -125,15 +74,17 @@ object Bench {
           // same). The default stays count() for cross-round
           // comparability; use the flag when the projection cost itself
           // is the measurement target.
-          try {
+          val ok = try {
             val df = fn(spark, sfDir)
             if (sys.env.get("SPARK_GRAFT_FORCE_FULL").contains("1"))
               df.queryExecution.toRdd.count()
             else df.count()
+            true
           } catch {
             case e: Throwable =>
-              if (sys.env.get("SPARK_GRAFT_RETHROW").contains("1")) throw e
-              -1L
+              System.err.println(
+                s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+              false
           }
           val t = (System.nanoTime() - t0) / 1e9
           if (debugReps) System.err.println(f"[reps] $name $t%.3f")
@@ -147,8 +98,11 @@ object Bench {
           spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
             if (!ChainGuard.isProtected(id)) rdd.unpersist(blocking = true)
           }
-          t
-        }.min
+          if (ok) Some(t) else None
+        }
+        val dt = (1 to reps).foldLeft(Option(Double.PositiveInfinity)) {
+          (best, _) => best.flatMap(b => rep().map(math.min(b, _)))
+        }
         // Streaming twins leave loaded state-store maps + GC debt that
         // shadowed the queries sorted right after them (r6: flagship
         // 9.2 s in-sweep vs 2.3 s isolated). Unload the providers and
@@ -167,12 +121,15 @@ object Bench {
         if (gateOnce(name) || gcAfter(name)) System.gc()
         name -> dt
       }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val qs = timed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = timed.map(_._2).sum
     // load canary surfaced top-level: divide any cross-round query diff by
     // the calibration ratio before calling it a plan regression
-    val cal = results.collectFirst { case ("calibration_cpu", v) => v }
+    val cal = timed.collectFirst { case ("calibration_cpu", v) => v }
     // Calibration-NORMALIZED total (VERDICT r13 task 7): the canary
     // drifted 0.057 -> 0.142 across five rounds, so raw cross-round
     // totals mostly measure the box. total_adjusted rescales to a fixed
@@ -185,7 +142,7 @@ object Bench {
         s""","calibration":${fmt(v)},"calibration_ref":$calRef""" +
           s""","total_adjusted":${fmt(total * calRef / v)}""").getOrElse("")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec"${calStr(_.toString)},"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec"${calStr(_.toString)},"queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     // The harness keeps only the last ~2000 chars of stdout and sbt's
     // epilogue spends ~100 of them; a full-precision 80-query line is
     // ~2600 chars, so its head (the {"metric":... prefix) gets truncated
@@ -194,13 +151,13 @@ object Bench {
     // detail budget. The complete line lives in bench_result.json.
     def ms(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val budget = 1600
-    val entries = results.sortBy(-_._2)
+    val entries = timed.sortBy(-_._2)
       .map { case (k, v) => s"\"" + k + "\":" + ms(v) }
     val kept = entries.scanLeft(0)(_ + _.length + 1).tail
       .zip(entries).takeWhile(_._1 <= budget).map(_._2)
     val qsShort = kept.mkString("{", ",", "}")
     val shortLine =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec"${calStr(ms)},"queries":$qsShort,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec"${calStr(ms)},"queries":$qsShort,"failed":$failed,"sf":"$sfDir"}"""
     // Order matters: the harness keeps only a merged-stream tail, so the
     // short parseable line must be the LAST thing we emit — r3's tail
     // shows the stderr full-line mirror displacing the stdout short line.

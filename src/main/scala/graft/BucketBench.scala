@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-rung demo of the bucketed co-located join (graft.sources
@@ -39,19 +38,8 @@ import org.apache.spark.sql.functions._
 object BucketBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          "/root/repo/target/scale/warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f
@@ -69,19 +57,6 @@ object BucketBench {
         .groupBy(o("o_orderkey"), o("o_orderdate"), o("o_orderpriority"))
         .agg(sum(Q.cents(l("l_extendedprice") * (lit(1.0) - l("l_discount"))))
           .as("revenue_cents"))
-
-    // In-memory catalog: a previous run's warehouse dir is an unknown
-    // location, so "overwrite" refuses it — clear the locations first.
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    Seq("bb_lineitem", "bb_orders").foreach { t =>
-      val d = new java.io.File(s"$wh/$t")
-      if (d.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(d)
-      }
-    }
 
     // One-time layout cost: repartition BY THE BUCKET HASH first so each
     // bucket lands in one file (without it, every write task emits a

@@ -8,12 +8,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q1_pricing_summary", "q3_top_order_revenue",
         "q5_region_nation_revenue", "flagship_bin_label_dist")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (not part of the driver contract): phase-level timers for
   * the MLlib/pipeline gates, to attribute fixed fit overhead vs data work.
-  * Usage: runMain graft.GateProbe [sol2|house|cv|l1|comparison]
+  * Usage: runMain graft.GateProbe [sol2|house]
   */
 object GateProbe {
   private def t[A](label: String)(f: => A): A = {
@@ -16,15 +14,7 @@ object GateProbe {
 
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("sol2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
 
     which match {
@@ -92,10 +82,6 @@ object GateProbe {
         }
         split.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-      case "cv" =>
-        t("cv_random_search total") {
-          SparkEntry.queries("cv_random_search")(spark, "/root/testdata/sf0.1").count()
-        }
       case "house" =>
         import graft.pipeline._
         import graft.split.Splits
@@ -129,82 +115,6 @@ object GateProbe {
         }
         split.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-      case "profile" =>
-        import org.apache.spark.sql.functions._
-        val df = Tables(spark, "/root/testdata/sf0.1", "lineitem")
-        val cols = Seq("l_quantity" -> 0, "l_extendedprice" -> 2,
-          "l_discount" -> 2, "l_tax" -> 2)
-        val kvCols = cols.flatMap { case (c, _) =>
-          Seq(lit(c), col(c).cast("double")) }
-        val melted = df.select(explode(map(kvCols: _*)).as(Seq("g", "v")))
-        val grid = t("grid build (checkpoint)") {
-          melted.groupBy("g", "v").agg(count(lit(1)).as("cnt"))
-            .localCheckpoint()
-        }
-        t("grid count")(System.err.println("rows=" + grid.count()))
-        val statRows = t("statRows agg") {
-          grid.groupBy("g").agg(
-            sum(when(col("v").isNotNull, col("cnt"))).as("n")).collect()
-        }
-        val probsDf = cols.flatMap { case (c, _) =>
-          Seq((c, 1, 0.25), (c, 2, 0.5), (c, 3, 0.75)) }
-        val spark2 = spark; import spark2.implicits._
-        t("quantile probe") {
-          graft.transform.GridQuantiles.quantilesFromCounts(
-            grid.filter(col("v").isNotNull),
-            broadcast(probsDf.toDF("g", "i", "p"))).collect()
-        }
-        // decompose the probe: window pass vs join-expansion
-        import org.apache.spark.sql.expressions.Window
-        val counts = grid.filter(col("v").isNotNull)
-        val byG = Window.partitionBy("g")
-        val cum = byG.orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val gridW = counts.select(col("g"), col("v"), col("cnt"),
-          (sum("cnt").over(cum) - col("cnt")).as("cb"),
-          sum("cnt").over(byG).as("n"))
-        t("probe: window only") {
-          gridW.write.format("noop").mode("overwrite").save()
-        }
-        t("probe: cum window only") {
-          counts.select(col("g"), col("v"), col("cnt"),
-            (sum("cnt").over(cum) - col("cnt")).as("cb"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        t("probe: plain sort only") {
-          counts.repartition(col("g"))
-            .sortWithinPartitions("g", "v")
-            .write.format("noop").mode("overwrite").save()
-        }
-        spark.conf.set("spark.sql.windowExec.buffer.in.memory.threshold",
-          "2000000")
-        t("probe: cum window, big in-memory threshold") {
-          counts.select(col("g"), col("v"), col("cnt"),
-            (sum("cnt").over(cum) - col("cnt")).as("cb"))
-            .write.format("noop").mode("overwrite").save()
-        }
-        spark.conf.set("spark.sql.windowExec.buffer.in.memory.threshold",
-          "4096")
-        val probs2 = broadcast(probsDf.toDF("g", "i", "p"))
-        t("probe: join+filter tail") {
-          val coversLo = col("lo").between(col("cb"), col("cb") + col("cnt") - 1)
-          val coversHi = col("hi").between(col("cb"), col("cb") + col("cnt") - 1)
-          probs2.join(gridW, Seq("g"))
-            .withColumn("k", col("p") * (col("n") - 1).cast("double"))
-            .withColumn("lo", floor(col("k")))
-            .withColumn("hi", ceil(col("k")))
-            .filter(coversLo || coversHi)
-            .groupBy("g", "i", "p", "k")
-            .agg(max(when(coversLo, col("v"))).as("vlo"),
-              max(when(coversHi, col("v"))).as("vhi"))
-            .collect()
-        }
-        t("full profileNumeric") {
-          graft.stats.Stats.profileNumeric(df, cols).count()
-        }
-        t("full profileNumeric again") {
-          graft.stats.Stats.profileNumeric(df, cols).count()
-        }
       case other =>
         System.err.println(s"unknown probe: $other")
     }

@@ -1,26 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table queries write real table data: pin the warehouse
-      // (same knob as Bench/BucketBench) instead of cwd/spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          "/root/repo/target/scale/warehouse"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump (dev iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

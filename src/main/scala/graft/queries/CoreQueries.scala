@@ -657,19 +657,6 @@ object CoreQueries extends QueryPack {
   val bucketedJoin: GraftQuery = GraftQuery(
     "bucketed_join_roundtrip",
     (s, dir) => {
-      // Leftover table dirs from a PREVIOUS session are unknown to the
-      // in-memory catalog and make saveAsTable(overwrite) refuse — clear
-      // any such orphan locations first (same-session reps overwrite
-      // through the catalog normally).
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq("graft_bkt_lineitem", "graft_bkt_orders").foreach { t =>
-        if (!s.catalog.tableExists(t)) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(new java.io.File(s"$wh/$t"))
-        }
-      }
       val l = Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
       val o = Tables(s, dir, "orders")
@@ -714,16 +701,6 @@ object CoreQueries extends QueryPack {
   val bucketedQ5: GraftQuery = GraftQuery(
     "bucketed_q5_region_revenue",
     (s, dir) => {
-      // clear orphan table dirs from a previous session (see bucketedJoin)
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq("graft_bkt5_lineitem", "graft_bkt5_orders").foreach { t =>
-        if (!s.catalog.tableExists(t)) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(new java.io.File(s"$wh/$t"))
-        }
-      }
       val l = Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
       val o = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
@@ -781,16 +758,6 @@ object CoreQueries extends QueryPack {
   val bucketedQ18: GraftQuery = GraftQuery(
     "bucketed_q18_large_volume",
     (s, dir) => {
-      // clear orphan table dirs from a previous session (see bucketedJoin)
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq("graft_bkt18_lineitem", "graft_bkt18_orders").foreach { t =>
-        if (!s.catalog.tableExists(t)) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(new java.io.File(s"$wh/$t"))
-        }
-      }
       val l = Tables(s, dir, "lineitem").select("l_orderkey", "l_quantity")
       val o = Tables(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")

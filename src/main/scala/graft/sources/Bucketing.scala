@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table helpers: pre-shuffle once at write time so repeated
   * joins/aggregations on the bucket key run shuffle-free — the co-located
@@ -9,14 +10,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
+  /** Writes `df` as `table`, bucketed and sorted by `key`. A table
+    * directory left by a previous session is unknown to the in-memory
+    * catalog and makes saveAsTable(overwrite) refuse it, so such an
+    * orphan location is cleared first; a table the catalog knows is
+    * overwritten through the catalog.
+    */
   def writeBucketed(
-      df: DataFrame, table: String, key: String, buckets: Int): Unit =
+      df: DataFrame, table: String, key: String, buckets: Int): Unit = {
+    val spark = df.sparkSession
+    if (!spark.catalog.tableExists(table)) {
+      val dir = new Path(spark.conf.get("spark.sql.warehouse.dir"), table)
+      dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true)
+    }
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-
-  def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
+  }
 
   /** True if the executed plan contains no shuffle (Exchange) node. */
   def isShuffleFree(df: DataFrame): Boolean =

@@ -20,7 +20,6 @@ import org.apache.spark.sql.SparkSession
   * flow in), so at sf0.1 (2 MB events) a stateful query runs 1 state
   * partition per operator, while a 2 GB rung gets ~32 and a 100 TB
   * deployment thousands — partition count follows bytes, not the box.
-  * `SPARK_GRAFT_STATE_PARTITIONS` overrides for scale-rung experiments.
   */
 object Streams {
 
@@ -35,13 +34,12 @@ object Streams {
     * partition size (the same knob AQE sizes batch shuffles with),
     * floored at 1.
     */
-  def statePartitions(spark: SparkSession, bytes: Long): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      val advisory = org.apache.spark.network.util.JavaUtils
-        .byteStringAsBytes(spark.conf.get(
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-      math.max(1L, (bytes + advisory - 1) / advisory).toInt
-    }
+  def statePartitions(spark: SparkSession, bytes: Long): Int = {
+    val advisory = org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(spark.conf.get(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+    math.max(1L, (bytes + advisory - 1) / advisory).toInt
+  }
 
   /** Pins `spark.sql.shuffle.partitions` to the size derived from the
     * stream's source data around `start` (the partition count is captured

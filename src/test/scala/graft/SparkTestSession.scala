@@ -8,10 +8,5 @@ trait SparkTestSession {
 }
 
 object SparkTestSession {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession.build()
 }

@@ -16,9 +16,10 @@ jar cf /tmp/graft-classes.jar -C target/scala-2.13/classes .
 JAR=/tmp/graft-classes.jar
 
 for sf in 0.001 0.01; do
-  env SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS=32 \
+  env SPARK_GRAFT_CPUS=32 \
   /opt/spark/bin/spark-submit --master local[32] --driver-memory 96g \
     --conf spark.local.dir=/root/repo/target/spark-tmp \
+    --conf spark.sql.shuffle.partitions=32 \
     --class graft.Verify "$JAR" /root/testdata/sf$sf \
     target/scale/verify_r13_full_sf$sf 2>>target/scale/r13_full.err
   python3 tools/check_parity.py /root/testdata/sf$sf \

@@ -20,9 +20,10 @@ JAR=/tmp/graft-classes.jar
 
 for sf in 0.001 0.01; do
   scratch_guard 10 || exit 1
-  env SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS=32 \
+  env SPARK_GRAFT_CPUS=32 \
   /opt/spark/bin/spark-submit --master local[32] --driver-memory 96g \
     --conf spark.local.dir=/root/repo/target/spark-tmp \
+    --conf spark.sql.shuffle.partitions=32 \
     --class graft.Verify "$JAR" /root/testdata/sf$sf \
     target/scale/verify_r14_full_sf$sf 2>>target/scale/r14_full.err
   python3 tools/check_parity.py /root/testdata/sf$sf \

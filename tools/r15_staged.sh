@@ -33,9 +33,9 @@ spark_batch () {
   scratch_guard 30 >> "$LOG" 2>&1 || { echo "R15_ABORT_DISK_$tag" >> "$LOG"; exit 1; }
   echo "=== spark $tag $(date +%T) ===" >> "$ERR"
   env SPARK_GRAFT_CPUS=32 SPARK_GRAFT_ONLY="$qs" \
-    SPARK_GRAFT_SHUFFLE_PARTITIONS=64 \
   /opt/spark/bin/spark-submit --master local[32] --driver-memory 96g \
     --conf spark.local.dir=/root/repo/target/spark-tmp \
+    --conf spark.sql.shuffle.partitions=64 \
     --class graft.Verify "$JAR" "$SF" "$OUT" 2>>"$ERR" \
     || { echo "R15_SPARK_FAIL_$tag" >> "$LOG"; exit 1; }
 }

@@ -11,10 +11,11 @@ B2=scd2_customer_status_history,rolling_user_features,events_hourly,sessionize_n
 for B in $B1 $B2; do
   echo "=== batch $B ===" >> "$LOG"
   SPARK_GRAFT_SF_DIR=/root/repo/target/scale/sf100 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_REPEAT=1 \
-  SPARK_GRAFT_SHUFFLE_PARTITIONS=256 SPARK_GRAFT_MAX_PARTITION_BYTES=33554432 \
   SPARK_GRAFT_ONLY="$B" \
   /opt/spark/bin/spark-submit --master local[32] --driver-memory 96g \
     --conf spark.local.dir=/root/repo/target/spark-tmp \
+    --conf spark.sql.shuffle.partitions=256 \
+    --conf spark.sql.files.maxPartitionBytes=32m \
     --class graft.Bench /tmp/graft-classes.jar 2>/dev/null \
     | grep '"metric"' >> "$LOG"
 done
