@@ -92,9 +92,7 @@ object GateProbe {
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         val train = t("synth")(HouseSynth.labeled(spark, 2000, seed = 11))
         val test = t("synth test")(HouseSynth.synth(spark, 800, idBase = 200000, seed = 12))
-        val cfg = HousePipeline.Config(tree = graft.tree.TreeParams(
-          maxDepth = 4, minSamplesSplit = 20, minSamplesLeaf = 10,
-          criterion = "entropy"))
+        val cfg = graft.queries.PipelineQueries.houseGateConfig
         val (tr, te, feats) = t("preprocess")(HousePipeline.preprocess(train, test, cfg))
         val split = t("split+persist") {
           val sp = Splits.stratifiedSplit(tr, "label", cfg.splitFrac, cfg.seed).persist()

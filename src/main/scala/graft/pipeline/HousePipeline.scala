@@ -6,6 +6,7 @@ import graft.transform._
 import graft.tree.{DecisionTree, TreeModel, TreeParams}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** End-to-end reproduction of the reference's canonical pipeline
   * (house_predict.py `__main__`, traced in SURVEY §3 entry point 1):
@@ -15,7 +16,9 @@ import org.apache.spark.sql.functions._
   *   binning of derived ratios) -> stratified 80/20 split -> decision-tree
   *   fit -> accuracy + macro-F1 -> test predictions -> submission table.
   *
-  * Everything is one lazy DataFrame DAG per stage; the tree is the
+  * Preprocessing fits every model from the raw frames in three actions
+  * and applies them all in one projection per frame (no join, window or
+  * exchange), so later stages never re-run a fit's plan; the tree is the
   * level-wise trainer. Binning/encoding configs are parameters (the
   * reference hard-codes them, house_predict.py:22-56); `referenceYear` is
   * parameterized per SURVEY §7.4.6.
@@ -60,92 +63,84 @@ object HousePipeline {
       model: TreeModel,
       featureCols: Seq[String])
 
-  /** Fit-on-train / transform-both preprocessing (house_predict.py:109-208). */
+  /** Fit-on-train / transform-both preprocessing (house_predict.py:109-208).
+    *
+    * Every model is fit from the raw frames, so no fit re-runs another
+    * fit's plan: the label encoders on train∪test (a size probe and one
+    * vocabulary collect for all categoricals), and all binning specs of
+    * both blocks in one [[QuantileBinner.fitMany]] over train plus the
+    * derived block. An equal-width spec joins that call with k = 1: its
+    * edges are then exactly the column's min and max, which is all
+    * [[EqualWidthBinner.fromMinMax]] needs. Each frame then gets every
+    * code, bin and derived column in one projection. The bins of derived
+    * columns apply to the derived expressions themselves, since a
+    * projection cannot read the columns it adds.
+    */
   def preprocess(
       train: DataFrame, test: DataFrame, cfg: Config)
       : (DataFrame, DataFrame, Seq[String]) = {
-    var tr = train
-    var te = test
-    val featureCols = Seq.newBuilder[String]
+    val specs = cfg.binning ++ cfg.derivedBinning
+    // fitMany keys by column name, so a column listed twice would
+    // silently reuse one model for both specs
+    require(specs.map(_._1).distinct.size == specs.size,
+      s"duplicate column in binning specs: ${specs.map(_._1)}")
 
-    // batched fit over train∪test: one vocab-size probe job for all
-    // categoricals instead of one per column (r17; codes identical to the
-    // per-column fitConcat)
     val catUnion = train.select(cfg.categoricals.map(col): _*)
       .unionByName(test.select(cfg.categoricals.map(col): _*))
-    LabelEncoder.fitMany(catUnion, cfg.categoricals).foreach { enc =>
-      val c = enc.column
-      tr = enc.transform(tr, s"${c}_encoded")
-      te = enc.transform(te, s"${c}_encoded")
-      featureCols += s"${c}_encoded"
-    }
-    // Batched block fit: every column in a block is fit against the SAME
-    // frame (appended bin columns never feed later fits in the block), so
-    // the per-column fits collapse into one QuantileBinner.fitMany pass
-    // plus ONE min/max aggregate for all equal-width columns — 3 scans
-    // for the reference's 10 binning specs instead of 10. Same edges,
-    // same transforms, same output order (r13 attribution: the gate's
-    // preprocess stage was 50% of its cost, nearly all per-fit action
-    // overhead; at 100 TB the win is scans, not scheduling).
-    def bin(block: Seq[(String, Strategy, Int)]): Unit = {
-      // fitMany/ewModels key by column name, so a block listing the same
-      // column twice would silently reuse one model for both specs
-      require(block.map(_._1).distinct.size == block.size,
-        s"duplicate column in binning block: ${block.map(_._1)}")
-      val qSpecs = block.collect { case (c, Quantile, k) => c -> k }
-      val qModels = QuantileBinner.fitMany(tr, qSpecs)
-      val ewSpecs = block.collect { case (c, EqualWidth, k) => c -> k }
-      val ewModels: Map[String, BinModel] =
-        if (ewSpecs.isEmpty) Map.empty
-        else {
-          val aggs = ewSpecs.flatMap { case (c, _) =>
-            Seq(min(col(c)).cast("double"), max(col(c)).cast("double")) }
-          val row = tr.agg(aggs.head, aggs.tail: _*).head()
-          ewSpecs.zipWithIndex.map { case ((c, k), i) =>
-            c -> EqualWidthBinner.fromMinMax(
-              c, k, row.getDouble(2 * i), row.getDouble(2 * i + 1))
-          }.toMap
-        }
-      block.foreach { case (c, strat, _) =>
-        val model = strat match {
-          case EqualWidth => ewModels(c)
-          case Quantile   => qModels(c)
-        }
-        tr = model.transform(tr, s"${c}_binned")
-        te = model.transform(te, s"${c}_binned")
-        featureCols += s"${c}_binned"
-      }
-    }
-    bin(cfg.binning)
+    val encoders = LabelEncoder.fitMany(catUnion, cfg.categoricals)
 
-    val block = Features.houseScriptBlock(cfg.referenceYear)
-    tr = Features.derive(tr, block)
-    te = Features.derive(te, block)
-    featureCols ++= Seq("property_age", "risk_score", "quality_score")
-    bin(cfg.derivedBinning)
+    val derived = Features.houseScriptBlock(cfg.referenceYear)
+    val bins = QuantileBinner.fitMany(Features.derive(train, derived),
+      specs.map {
+        case (c, Quantile, k)   => c -> k
+        case (c, EqualWidth, _) => c -> 1
+      })
+    val binModels = specs.map {
+      case (c, Quantile, _)   => c -> bins(c)
+      case (c, EqualWidth, k) =>
+        val e = bins(c).edges
+        c -> EqualWidthBinner.fromMinMax(c, k, e.head, e.last)
+    }.toMap
+    val derivedOf = derived.toMap
+    val binned =
+      cfg.binning.map { case (c, _, _) => s"${c}_binned" -> binModels(c).expr } ++
+        cfg.derivedBinning.map { case (c, _, _) =>
+          s"${c}_binned" -> binModels(c).exprOf(derivedOf.getOrElse(c, col(c)))
+        }
+    // small-vocabulary codes are projections too, which the optimizer
+    // collapses into this one
+    def apply(df: DataFrame): DataFrame =
+      encoders.foldLeft(df)((d, m) => m.transform(d, s"${m.column}_encoded"))
+        .withColumns(ListMap(derived ++ binned: _*))
 
-    featureCols ++= cfg.passthrough
-    (tr, te, featureCols.result())
+    val featureCols =
+      cfg.categoricals.map(c => s"${c}_encoded") ++
+        cfg.binning.map { case (c, _, _) => s"${c}_binned" } ++
+        Seq("property_age", "risk_score", "quality_score") ++
+        cfg.derivedBinning.map { case (c, _, _) => s"${c}_binned" } ++
+        cfg.passthrough
+    (apply(train), apply(test), featureCols)
   }
 
   def run(train: DataFrame, test: DataFrame, cfg: Config = Config()): Result = {
     val (tr, te, feats) = preprocess(train, test, cfg)
     val split = Splits.stratifiedSplit(tr, "label", cfg.splitFrac, cfg.seed)
       .persist()
-    val fitSet = split.filter(col("split") === 0)
-    val valSet = split.filter(col("split") === 1)
-    val model = DecisionTree.fit(fitSet, feats, "label", cfg.tree)
-    val scored = model.transform(valSet, "pred")
-      .select(col("label").cast("long").as("label"), col("pred"))
-    // one action for both validation metrics (r17): accuracy and macro-F1
-    // aggregate the same scored frame — crossJoin the two 1-row results
-    // so the frame is computed once (the rf_train_eval shape)
-    val mRow = Metrics.accuracy(scored, "label", "pred")
-      .crossJoin(Metrics.macroAvg(scored, "label", "pred")).head()
-    val acc = mRow.getDouble(0)
-    val f1 = mRow.getAs[Double]("macro_f1")
-    val submission = model.transform(te, "label").select("id", "label")
-    split.unpersist()
-    Result(submission, acc, f1, model, feats)
+    try {
+      val fitSet = split.filter(col("split") === 0)
+      val valSet = split.filter(col("split") === 1)
+      val model = DecisionTree.fit(fitSet, feats, "label", cfg.tree)
+      val scored = model.transform(valSet, "pred")
+        .select(col("label").cast("long").as("label"), col("pred"))
+      // one action for both validation metrics (r17): accuracy and macro-F1
+      // aggregate the same scored frame — crossJoin the two 1-row results
+      // so the frame is computed once (the rf_train_eval shape)
+      val mRow = Metrics.accuracy(scored, "label", "pred")
+        .crossJoin(Metrics.macroAvg(scored, "label", "pred")).head()
+      val acc = mRow.getDouble(0)
+      val f1 = mRow.getAs[Double]("macro_f1")
+      val submission = model.transform(te, "label").select("id", "label")
+      Result(submission, acc, f1, model, feats)
+    } finally split.unpersist()
   }
 }

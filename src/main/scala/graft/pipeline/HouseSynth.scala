@@ -42,11 +42,12 @@ object HouseSynth {
         1 + rng.nextInt(10), 1 + rng.nextInt(10))
     }.toDF()
       // A few thousand synthetic rows parallelize into defaultParallelism
-      // slices (32 on the bench box); every MLlib RDD job downstream then
-      // schedules 32 tasks of ~50 rows — pure scheduling overhead, and
-      // AQE can't help because MLlib's tree/boosting internals are RDD
-      // jobs. Two partitions keeps the whole gate pipeline's task count
-      // proportional to the data.
+      // slices (one per core); every MLlib RDD job downstream then
+      // schedules a task per slice, each of a few dozen rows on a wide
+      // box — pure scheduling overhead, and AQE can't help because
+      // MLlib's tree/boosting internals are RDD jobs. Two partitions
+      // keeps the whole gate pipeline's task count proportional to the
+      // data.
       .coalesce(2)
   }
 

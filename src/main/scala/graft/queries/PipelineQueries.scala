@@ -12,6 +12,14 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries extends QueryPack {
 
+  /** The house gate's pipeline config: the reference preprocessing with
+    * a depth-4 entropy tree.
+    */
+  val houseGateConfig: HousePipeline.Config = HousePipeline.Config(
+    tree = graft.tree.TreeParams(
+      maxDepth = 4, minSamplesSplit = 20, minSamplesLeaf = 10,
+      criterion = "entropy"))
+
   /** Entry point 1 (house_predict.py __main__): preprocess -> stratified
     * split -> level-wise tree -> submission. One summary row: validation
     * metrics + submission label histogram.
@@ -26,7 +34,7 @@ object PipelineQueries extends QueryPack {
       // The gate frame is 2000 rows but the pipeline is ~20 actions
       // (encoder/binner fits, per-level tree jobs, metrics); at the
       // session's core-count shuffle partitioning each of those actions
-      // schedules 32 reducers for a few KB of data, and AQE's
+      // schedules one reducer per core for a few KB of data, and AQE's
       // parallelismFirst mode deliberately keeps partition count at
       // defaultParallelism rather than the advisory size. Size the
       // shuffle to the DATA for the gate's scope (same move as
@@ -37,10 +45,7 @@ object PipelineQueries extends QueryPack {
       val (r, hist) =
         try {
           s.conf.set("spark.sql.shuffle.partitions", "8")
-          val res = HousePipeline.run(train, test,
-            HousePipeline.Config(tree = graft.tree.TreeParams(
-              maxDepth = 4, minSamplesSplit = 20, minSamplesLeaf = 10,
-              criterion = "entropy")))
+          val res = HousePipeline.run(train, test, houseGateConfig)
           val h = res.submission.groupBy("label").agg(count(lit(1)).as("n"))
             .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
           (res, h)
@@ -71,8 +76,8 @@ object PipelineQueries extends QueryPack {
       // Same tiny-frame shuffle pin as the house gate above (VERDICT
       // r15 task 3): the pipeline is ~30 actions (encoder fits, 3 model
       // families, CV folds) over a 1000-row synth frame — at the
-      // session's 32-partition config each action schedules 32 reducers
-      // for a few KB. Values are partition-independent (hash split,
+      // session's core-count partitioning each action schedules one
+      // reducer per core for a few KB. Values are partition-independent (hash split,
       // seeded fits), so the report is unchanged; only scheduling load
       // drops. The house gate measured 20.6 -> 7.3 s from this pin.
       val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object TransformQueries extends QueryPack {
 
-  /** M1: alphabetical label encoding of nation names (vocab join). */
+  /** M1: alphabetical label encoding of nation names (vocabulary lookup). */
   val labelEncode: GraftQuery = GraftQuery(
     "label_encode_nation",
     (s, dir) => {

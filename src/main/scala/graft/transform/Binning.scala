@@ -22,8 +22,11 @@ final case class BinModel(column: String, edges: Array[Double]) {
     * the native codegen'd binary-search expression (O(log k) per row,
     * survives k in the thousands where a `when`-chain overflows codegen).
     */
-  def expr: Column =
-    graft.expressions.CutBucket.cutBucket(col(column).cast("double"), edges.toSeq)
+  def expr: Column = exprOf(col(column))
+
+  /** [[expr]] over any numeric expression in place of `column`. */
+  def exprOf(c: Column): Column =
+    graft.expressions.CutBucket.cutBucket(c.cast("double"), edges.toSeq)
 
   /** Equivalent composed-builtins form (O(k) `when`-chain) — kept for
     * plan comparison and as the no-custom-expression fallback.

@@ -1,42 +1,65 @@
 package graft.transform
 
 import graft.Q
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.expressions.VocabLookup
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Label encoding: string -> dense int code with sklearn semantics
   * (alphabetical vocabulary order; unseen category -> -1). Reference:
   * house_predict.py:118-127 (fit on train∪test) and Sol_2.ipynb cell 4
   * (fit=False path mapping unseen to -1).
   *
-  * The vocabulary is a DataFrame (not a collected map): transform is a
-  * broadcast equi-join + coalesce(-1), which scales to arbitrarily large
-  * vocabularies and stays oracle-expressible (dense_rank over distinct).
+  * Both paths code a value by its rank in Spark's string order among the
+  * distinct non-null values of the fit frame, with the column cast to
+  * string as fit casts it (the oracles' dense_rank over distinct).
   */
-final case class LabelEncodeModel(column: String, vocab: DataFrame) {
+sealed trait LabelEncodeModel {
+  def column: String
+
   /** Adds `out` = dense code of `column`, -1 when unseen/null. */
+  def transform(df: DataFrame, out: String): DataFrame
+}
+
+/** Small vocabulary, collected in code order: transform is
+  * one [[VocabLookup]] expression, so applying the encoder adds no join,
+  * window or exchange to the plan.
+  */
+final case class SmallVocabModel(column: String, vocab: IndexedSeq[String])
+    extends LabelEncodeModel {
+  def transform(df: DataFrame, out: String): DataFrame =
+    df.withColumn(out, VocabLookup.lookup(col(column).cast("string"), vocab))
+}
+
+/** Large vocabulary as a (value, __code) frame that never leaves the
+  * executors: transform is a broadcast equi-join + coalesce(-1).
+  */
+final case class LargeVocabModel(column: String, vocab: DataFrame)
+    extends LabelEncodeModel {
   def transform(df: DataFrame, out: String): DataFrame =
     df.join(
-        broadcast(vocab.withColumnRenamed("value", column)),
-        Seq(column), "left")
+        broadcast(vocab.withColumnRenamed("value", "__vocab_value")),
+        col(column).cast("string") === col("__vocab_value"), "left")
       .withColumn(out, coalesce(col("__code"), lit(-1)))
-      .drop("__code")
+      .drop("__vocab_value", "__code")
 }
 
 object LabelEncoder {
-  /** Vocabularies at or below this size are coded with a single global
-    * window — one task sorting only the DISTINCT values, which for ≤1M
-    * strings is cheaper than any distributed rank machinery.
+  /** Vocabularies at or below this size are collected and coded by a
+    * lookup expression. Its map is serialized into the task binary of
+    * every stage that applies the encoder: 10,000 values of 13 bytes take
+    * 360 KB, under Spark's 1 MB large-task warning, where a million take
+    * 36 MB.
     */
-  val SmallVocab = 1000000L
+  val SmallVocab = 10000L
 
   /** Fit = sorted distinct non-null values -> codes 0..k-1, size-gated:
     *
-    *  - small vocab (≤ [[SmallVocab]] distinct values): plain
-    *    `row_number` over a global sort of the distinct set. Stays fully
-    *    inside Catalyst/codegen; the single task holds only the
-    *    vocabulary, never the data.
+    *  - small vocab (≤ [[SmallVocab]] distinct values): collect the
+    *    distinct values and sort them in Spark's string order; the model
+    *    is a [[SmallVocabModel]].
     *  - large vocab: range-repartition the distinct set (parallel sort),
     *    freeze the partitioning with an eager localCheckpoint, then code =
     *    per-partition `row_number` + a broadcast cumulative-offset join
@@ -48,76 +71,75 @@ object LabelEncoder {
     */
   def fit(
       df: DataFrame, column: String,
-      smallVocabThreshold: Long = SmallVocab): LabelEncodeModel = {
-    val distinctVals = df
-      .select(col(column).cast("string").as("value"))
-      .filter(col("value").isNotNull)
-      .distinct()
-    val n = distinctVals.count()
-    val vocab =
-      if (n <= smallVocabThreshold) {
-        distinctVals
-          .withColumn("__code",
-            (row_number().over(Window.orderBy("value")) - 1).cast("int"))
-      } else {
-        val spark = df.sparkSession
-        import spark.implicits._
-        val parts = spark.sparkContext.defaultParallelism.max(2)
-        val sorted = distinctVals
-          .repartitionByRange(parts, col("value"))
-          .sortWithinPartitions("value")
-          .localCheckpoint() // eager: pins range boundaries + pid mapping
-        val sizes = sorted
-          .groupBy(spark_partition_id().as("__pid"))
-          .agg(count(lit(1)).as("__n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-        val offsets =
-          sizes.map(_._1).zip(sizes.map(_._2).scanLeft(0L)(_ + _).init)
-        val offDf = broadcast(offsets.toSeq.toDF("__pid", "__off"))
-        val wLocal = Window.partitionBy("__pid").orderBy("value")
-        sorted
-          .withColumn("__pid", spark_partition_id())
-          .withColumn("__rn", row_number().over(wLocal))
-          .join(offDf, Seq("__pid"))
-          .select(col("value"),
-            (col("__off") + col("__rn") - 1).cast("int").as("__code"))
-      }
-    LabelEncodeModel(column, vocab)
-  }
+      smallVocabThreshold: Long = SmallVocab): LabelEncodeModel =
+    fitMany(df, Seq(column), smallVocabThreshold).head
 
   /** Fit over train∪test (house_predict.py:123). */
   def fitConcat(a: DataFrame, b: DataFrame, column: String): LabelEncodeModel =
     fit(a.select(column).unionByName(b.select(column)), column)
 
-  /** Batched fit: the small-vs-large vocab gate for EVERY column comes
-    * from ONE countDistinct aggregate over `df` instead of one count job
-    * per column (r17: the sol2/house gates paid ~0.5 s of action/codegen
-    * overhead per categorical for a 4-value vocabulary). Each model's
-    * vocab frame — and therefore every code — is built exactly as
-    * [[fit]] builds it; only the size probe is shared.
+  /** Batched fit over one distinct (column, value) set of every column:
+    * one action counts each vocabulary (the small-vs-large gate) and one
+    * collects every small vocabulary — two actions for any number of
+    * categoricals.
     */
   def fitMany(
       df: DataFrame, columns: Seq[String],
       smallVocabThreshold: Long = SmallVocab): Seq[LabelEncodeModel] = {
     if (columns.isEmpty) return Seq.empty
-    val aggs = columns.map(c =>
-      countDistinct(col(c).cast("string")).as(s"__nd_$c"))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val pairs = df
+      .select(explode(array(columns.zipWithIndex.map { case (c, i) =>
+        struct(lit(i).as("g"), col(c).cast("string").as("v")) }: _*))
+        .as("gv"))
+      .select("gv.g", "gv.v")
+      .filter(col("v").isNotNull)
+      .distinct()
+    val sizes = pairs.groupBy("g").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val small = columns.indices
+      .filter(i => sizes.getOrElse(i, 0L) <= smallVocabThreshold)
+    // with every column small, the collect's first stage is the probe's
+    // verbatim, so its generated code comes from the codegen cache
+    val vocabs =
+      if (small.isEmpty) Map.empty[Int, Array[Row]]
+      else (if (small.size == columns.size) pairs
+            else pairs.filter(col("g").isin(small: _*)))
+        .collect().groupBy(_.getInt(0))
     columns.zipWithIndex.map { case (c, i) =>
-      if (row.getLong(i) > smallVocabThreshold) {
-        // large-vocab path unchanged — delegate (its extra count is noise
-        // next to the range-sort it sets up)
-        fit(df, c, smallVocabThreshold)
-      } else {
-        val vocab = df
-          .select(col(c).cast("string").as("value"))
-          .filter(col("value").isNotNull)
-          .distinct()
-          .withColumn("__code",
-            (row_number().over(Window.orderBy("value")) - 1).cast("int"))
-        LabelEncodeModel(c, vocab)
-      }
+      if (!small.contains(i)) fitLarge(df, c)
+      else SmallVocabModel(c, vocabs.getOrElse(i, Array.empty[Row])
+        // Spark's string order, so code k is the value ORDER BY puts k-th
+        .map(r => UTF8String.fromString(r.getString(1)))
+        .sortWith(_.compareTo(_) < 0)
+        .map(_.toString).toIndexedSeq)
     }
+  }
+
+  private def fitLarge(df: DataFrame, column: String): LargeVocabModel = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val parts = spark.sparkContext.defaultParallelism.max(2)
+    val sorted = df
+      .select(col(column).cast("string").as("value"))
+      .filter(col("value").isNotNull)
+      .distinct()
+      .repartitionByRange(parts, col("value"))
+      .sortWithinPartitions("value")
+      .localCheckpoint() // eager: pins range boundaries + pid mapping
+    val sizes = sorted
+      .groupBy(spark_partition_id().as("__pid"))
+      .agg(count(lit(1)).as("__n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val offsets =
+      sizes.map(_._1).zip(sizes.map(_._2).scanLeft(0L)(_ + _).init)
+    val offDf = broadcast(offsets.toSeq.toDF("__pid", "__off"))
+    val wLocal = Window.partitionBy("__pid").orderBy("value")
+    LargeVocabModel(column, sorted
+      .withColumn("__pid", spark_partition_id())
+      .withColumn("__rn", row_number().over(wLocal))
+      .join(offDf, Seq("__pid"))
+      .select(col("value"),
+        (col("__off") + col("__rn") - 1).cast("int").as("__code")))
   }
 }
 

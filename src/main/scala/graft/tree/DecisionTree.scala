@@ -265,20 +265,10 @@ object DecisionTree {
           (binned, (f, code) => edgeMap(f).edges(code.toInt + 1))
       }
 
-    val labels = df0.select(col(labelCol).cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted.toSeq
-
-    var cur = df0
-      .select((features.map(col) :+
-        col(labelCol).cast("long").as("label") :+
-        lit(0).as("__node")): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val rootCounts = {
-      val m = cur.groupBy("label").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      labels.map(m.getOrElse(_, 0L))
-    }
+    // the label set and the root's class counts come from one action
+    val (labels, rootCounts) = df0
+      .groupBy(col(labelCol).cast("long").as("label")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq.unzip
 
     val nFeat = params.maxFeatures match {
       case None          => features.size
@@ -303,89 +293,99 @@ object DecisionTree {
     val leaves = scala.collection.mutable.Map[Int, TreeLeaf]()
     val splits = scala.collection.mutable.Map[Int, (String, Double)]()
     var frontier: Map[Int, Seq[Long]] = Map(0 -> rootCounts)
+    // materialized by the level-0 stats pass, like every routed child
+    var cur = df0
+      .select((features.map(col) :+
+        col(labelCol).cast("long").as("label") :+
+        lit(0).as("__node")): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // parent frame whose persisted blocks are still feeding the (lazily
     // materialized) child: unpersisted only after the child's first
     // action (r17 — the explicit per-level count() materialization was a
     // full extra pass over the routed data at every depth)
     var pendingPrev: Option[DataFrame] = None
 
-    for (depth <- 0 to params.maxDepth if frontier.nonEmpty) {
-      // stopping rules (house_predict.py:325-334)
-      val (stopNow, searchable) = frontier.partition { case (_, counts) =>
-        depth >= params.maxDepth ||
-          counts.sum < params.minSamplesSplit ||
-          counts.count(_ > 0) <= 1
-      }
-      stopNow.foreach { case (id, c) => leaves(id) = leafOf(c) }
+    try {
+      for (depth <- 0 to params.maxDepth if frontier.nonEmpty) {
+        // stopping rules (house_predict.py:325-334)
+        val (stopNow, searchable) = frontier.partition { case (_, counts) =>
+          depth >= params.maxDepth ||
+            counts.sum < params.minSamplesSplit ||
+            counts.count(_ > 0) <= 1
+        }
+        stopNow.foreach { case (id, c) => leaves(id) = leafOf(c) }
 
-      if (searchable.nonEmpty) {
-        val ids = searchable.keys.toSeq.sorted
-        val active = cur.filter(col("__node").isin(ids: _*))
-        val featsByNode = ids.map(id => id -> sampleFeatures(id)).toMap
-        val usedFeats = featsByNode.values.flatten.toSeq.distinct
-        val stats = splitStats(
-          active, usedFeats, labels, params.criterion, params.minSamplesLeaf)
-        // best candidate per (node, feature): max gain, lowest threshold
-        val w = Window.partitionBy("__node", "feat")
-          .orderBy(desc("gain"), asc("threshold"))
-        val best = stats.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .collect()
-          .map { r =>
-            (r.getAs[Int]("__node"), r.getAs[String]("feat")) ->
-              (r.getAs[Double]("threshold"), r.getAs[Double]("gain"),
-                labels.indices.map(i => r.getAs[Long](s"l_c$i")))
-          }.toMap
-        // this level's stats pass has materialized `cur`'s persisted
-        // blocks — the parent's are no longer needed
-        pendingPrev.foreach(_.unpersist())
-        pendingPrev = None
+        if (searchable.nonEmpty) {
+          val ids = searchable.keys.toSeq.sorted
+          val active = cur.filter(col("__node").isin(ids: _*))
+          val featsByNode = ids.map(id => id -> sampleFeatures(id)).toMap
+          val usedFeats = featsByNode.values.flatten.toSeq.distinct
+          val stats = splitStats(
+            active, usedFeats, labels, params.criterion, params.minSamplesLeaf)
+          // best candidate per (node, feature): max gain, lowest threshold
+          val w = Window.partitionBy("__node", "feat")
+            .orderBy(desc("gain"), asc("threshold"))
+          val best = stats.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__rn")
+            .collect()
+            .map { r =>
+              (r.getAs[Int]("__node"), r.getAs[String]("feat")) ->
+                (r.getAs[Double]("threshold"), r.getAs[Double]("gain"),
+                  labels.indices.map(i => r.getAs[Long](s"l_c$i")))
+            }.toMap
+          // this level's stats pass has materialized `cur`'s persisted
+          // blocks — the parent's are no longer needed
+          pendingPrev.foreach(_.unpersist())
+          pendingPrev = None
 
-        var next = Map.empty[Int, Seq[Long]]
-        val routed = scala.collection.mutable.ArrayBuffer[(Int, String, Double)]()
-        searchable.foreach { case (id, counts) =>
-          // first feature in sampled order wins on strict gain improvement
-          var bestGain = 0.0
-          var chosen: Option[(String, Double, Seq[Long])] = None
-          featsByNode(id).foreach { f =>
-            best.get((id, f)).foreach { case (thr, gain, lc) =>
-              if (gain > bestGain) { bestGain = gain; chosen = Some((f, thr, lc)) }
+          var next = Map.empty[Int, Seq[Long]]
+          val routed = scala.collection.mutable.ArrayBuffer[(Int, String, Double)]()
+          searchable.foreach { case (id, counts) =>
+            // first feature in sampled order wins on strict gain improvement
+            var bestGain = 0.0
+            var chosen: Option[(String, Double, Seq[Long])] = None
+            featsByNode(id).foreach { f =>
+              best.get((id, f)).foreach { case (thr, gain, lc) =>
+                if (gain > bestGain) { bestGain = gain; chosen = Some((f, thr, lc)) }
+              }
+            }
+            chosen match {
+              case None => leaves(id) = leafOf(counts)
+              case Some((f, thrRaw, lc)) =>
+                val thr = thrRaw // still in (possibly binned) training units
+                splits(id) = (f, thr)
+                routed += ((id, f, thr))
+                next += (2 * id + 1) -> lc
+                next += (2 * id + 2) -> counts.zip(lc).map { case (t, l) => t - l }
             }
           }
-          chosen match {
-            case None => leaves(id) = leafOf(counts)
-            case Some((f, thrRaw, lc)) =>
-              val thr = thrRaw // still in (possibly binned) training units
-              splits(id) = (f, thr)
-              routed += ((id, f, thr))
-              next += (2 * id + 1) -> lc
-              next += (2 * id + 2) -> counts.zip(lc).map { case (t, l) => t - l }
-          }
-        }
 
-        if (routed.nonEmpty) {
-          val routeExpr = routed.foldLeft(col("__node")) {
-            case (e, (id, f, thr)) =>
-              when(col("__node") === id,
-                when(col(f).cast("double") <= thr, lit(2 * id + 1))
-                  .otherwise(lit(2 * id + 2))).otherwise(e)
+          if (routed.nonEmpty) {
+            val routeExpr = routed.foldLeft(col("__node")) {
+              case (e, (id, f, thr)) =>
+                when(col("__node") === id,
+                  when(col(f).cast("double") <= thr, lit(2 * id + 1))
+                    .otherwise(lit(2 * id + 2))).otherwise(e)
+            }
+            val prev = cur
+            cur = cur.filter(col("__node").isin(routed.map(_._1).toSeq: _*))
+              .withColumn("__node", routeExpr)
+              .persist(StorageLevel.MEMORY_AND_DISK)
+            // no explicit count: the NEXT level's stats pass materializes
+            // the child (the useful work), and only then is the parent
+            // released (pendingPrev)
+            pendingPrev = Some(prev)
           }
-          val prev = cur
-          cur = cur.filter(col("__node").isin(routed.map(_._1).toSeq: _*))
-            .withColumn("__node", routeExpr)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          // no explicit count: the NEXT level's stats pass materializes
-          // the child (the useful work), and only then is the parent
-          // released (pendingPrev)
-          pendingPrev = Some(prev)
+          frontier = next
+        } else {
+          frontier = Map.empty
         }
-        frontier = next
-      } else {
-        frontier = Map.empty
       }
+    } finally {
+      // also on a throw: a failed fit must not leave its frames cached
+      cur.unpersist()
+      pendingPrev.foreach(_.unpersist()) // loop may end before a next pass
     }
-    cur.unpersist()
-    pendingPrev.foreach(_.unpersist()) // loop may end before a next pass
     frontier.foreach { case (id, c) => leaves(id) = leafOf(c) } // safety
 
     def build(id: Int): TreeNode =

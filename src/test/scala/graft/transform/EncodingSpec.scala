@@ -23,17 +23,60 @@ class EncodingSpec extends AnyFunSuite with SparkTestSession {
     assert(got == 1) // x -> 0, y -> 1
   }
 
-  test("large-vocab offset path assigns identical codes to the window path") {
+  test("large-vocab offset path assigns identical codes to the lookup path") {
     val vals = scala.util.Random.shuffle((0 until 500).map(i => f"v$i%04d"))
     val df = vals.toDF("c")
-    val small = LabelEncoder.fit(df, "c")
-    val large = LabelEncoder.fit(df, "c", smallVocabThreshold = 0L)
-    val sm = small.vocab.as[(String, Int)].collect().toMap
+    val small = LabelEncoder.fit(df, "c") match {
+      case m: SmallVocabModel => m
+      case other              => fail(s"expected the lookup path: $other")
+    }
+    val large = LabelEncoder.fit(df, "c", smallVocabThreshold = 0L) match {
+      case m: LargeVocabModel => m
+      case other              => fail(s"expected the range path: $other")
+    }
+    val sm = small.vocab.zipWithIndex.toMap
     val lg = large.vocab.as[(String, Int)].collect().toMap
     assert(lg == sm)
     assert(sm.size == 500 && sm(f"v${0}%04d") == 0 && sm(f"v${499}%04d") == 499)
     // codes stay stable across re-executions of the vocab plan
     assert(large.vocab.as[(String, Int)].collect().toMap == lg)
+  }
+
+  test("lookup path: unseen and null map to -1, and no join is planned") {
+    val train = Seq("b", "a", null).toDF("c")
+    val test = Seq(Some("a"), None, Some("z"), Some("b")).toDF("c")
+    val m = LabelEncoder.fit(train, "c")
+    assert(m.isInstanceOf[SmallVocabModel])
+    val out = m.transform(test, "code")
+    assert(out.select("code").as[Int].collect().toSeq == Seq(0, -1, -1, 1))
+    val plan = out.queryExecution.optimizedPlan
+    assert(plan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.isEmpty, plan.treeString)
+  }
+
+  test("lookup path casts a non-string column the way fit does") {
+    // fit codes the string forms: "10" < "100" < "9"
+    val m = LabelEncoder.fit(Seq(10, 9, 100).toDF("n"), "n")
+    val got = m.transform(Seq(9L, 10L, 7L, 100L).toDF("n"), "code")
+      .select("code").as[Int].collect().toSeq
+    assert(got == Seq(2, 0, -1, 1))
+  }
+
+  test("lookup codes equal the range-path codes, in Spark's string order") {
+    // U+FFFD sorts before U+1F600 in UTF-8 byte order but after it in
+    // UTF-16 order, so a JVM String sort would swap their codes
+    val vals = Seq("\uFFFD", "\uD83D\uDE00", "z", "\u00e9", "A", "a", "") ++
+      (0 until 200).map(i => s"w$i")
+    val fitDf = scala.util.Random.shuffle(vals).toDF("c")
+    val probe = (vals.map(Option(_)) ++ Seq(None, Some("unseen"))).toDF("c")
+    def codes(m: LabelEncodeModel) = m.transform(probe, "code")
+      .select("c", "code").as[(Option[String], Int)].collect().toSet
+    val lookup = codes(LabelEncoder.fit(fitDf, "c"))
+    assert(lookup == codes(LabelEncoder.fit(fitDf, "c", smallVocabThreshold = 0L)))
+    val sorted = fitDf.distinct().orderBy("c").as[String].collect().toSeq
+    assert(lookup == (sorted.map(Option(_)).zipWithIndex ++
+      Seq((None, -1), (Some("unseen"), -1))).toSet)
   }
 
   test("standardize matches sklearn ddof=0 closed form") {

@@ -22,6 +22,16 @@ class DecisionTreeSpec extends AnyFunSuite with SparkTestSession {
     assert(acc.getDouble(0) == 1.0)
   }
 
+  test("a fit that throws leaves no frame persisted") {
+    // ANSI casts: "abc" fails the level-0 cast("double") mid-fit, after
+    // the root frame was persisted
+    val df = Seq(("1.0", 0L), ("abc", 1L), ("2.0", 1L)).toDF("x", "label")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](
+      DecisionTree.fit(df, Seq("x"), "label", TreeParams(maxDepth = 2)))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("pure node stops immediately (root leaf)") {
     val df = Seq((1.0, 1L), (2.0, 1L), (3.0, 1L)).toDF("x", "label")
     val m = DecisionTree.fit(df, Seq("x"), "label", TreeParams())
